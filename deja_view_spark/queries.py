@@ -327,29 +327,23 @@ ORDER BY probe_id, rank
 
 def q_topk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/S2 point-lookup surface: single-probe top-k via
-    operators.topk.topk_similar — probe vector looked up driver-side
-    (one-row action, the reference embeds its probe driver-side too,
-    github_similarity_service.py:397-401), folded into the plan as a
-    literal, candidates stream through one pruned scan, sorted limit
-    compiles to TakeOrderedAndProject."""
-    from deja_view_spark.operators.topk import topk_similar
+    operators.topk.TopKSimilar — the probe's own row is broadcast-
+    joined into the candidates (the reference embeds its probe
+    driver-side, github_similarity_service.py:397-401; here it is one
+    row of the table), candidates stream through one scan, the sorted
+    limit compiles to TakeOrderedAndProject with the self row first,
+    and the self row is dropped last."""
+    from deja_view_spark.operators.topk import TopKSimilar
 
     emb = load_table(spark, sf_dir, "embeddings")
-    probe_vec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == 7).select("embedding").head()[0]
-    ]
     named = emb.select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vector")
     )
-    return topk_similar(
-        named,
-        probe_vec,
-        probe_doc_id=7,
-        top_k=5,
-        min_similarity=-1.0,
-        convention="service",
-        assume_normalized=False,
+    topk = TopKSimilar(named, assume_normalized=False)
+    return (
+        topk(F.col("probe_id") == 7, top_k=5)
+        .where(~F.col("is_self"))
+        .drop("is_self")
     )
 
 

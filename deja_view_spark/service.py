@@ -13,7 +13,20 @@ framework to serve them (none is installed in-sandbox).
 
 The "collection" is an embeddings parquet dir (doc_id, vector, plus
 carried metadata columns) — the engine's stand-in for the reference's
-Chroma collection (github_similarity_service.py:102-121)."""
+Chroma collection (github_similarity_service.py:102-121).
+
+Reads open the collection once per on-disk snapshot: the service keeps
+the opened collection (an ``operators.topk.TopKSimilar`` over it, which
+also builds the probe-independent parts of the query plan once) keyed
+by a driver-side fingerprint of the parquet files under ``index_dir``
+(relpath, size, mtime_ns), and re-opens it only when that changes —
+after its own ``index()``/``clear()`` or a rewrite by another writer —
+so every read sees the current files without re-listing them or
+re-inferring the schema. ``find_similar`` is then one collect of one
+plan: the probe's own row is broadcast-joined into the candidates and
+sorted first, so there is no separate probe lookup. That is 2 Spark
+jobs per query, the broadcast exchange and the top-k; fewer would need
+the probe vector held on the driver rather than in the collection."""
 
 from __future__ import annotations
 
@@ -22,6 +35,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from deja_view_spark.operators.topk import TopKSimilar, split_self
 
 SERVICE_NAME = "github-issues-similarity"  # reference api.py:71
 VERSION = "1.0.0"  # reference api.py:70
@@ -37,6 +52,8 @@ class SimilarityService:
         self.spark = spark
         self.index_dir = index_dir
         self.dim = dim
+        # (fingerprint, TopKSimilar) of the last opened snapshot
+        self._opened: tuple[tuple, TopKSimilar] | None = None
 
     # ------------------------------------------------------------ health
     def health(self) -> dict:
@@ -73,6 +90,9 @@ class SimilarityService:
         emb.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("repository").parquet(self.index_dir)
+        # open the snapshot just written, so the first read after an
+        # index() does not pay for listing it and inferring its schema
+        self._collection()
         batches = self.spark.sparkContext.defaultParallelism
         return {
             "indexed": n,
@@ -83,10 +103,30 @@ class SimilarityService:
             "message": f"Successfully indexed {n} issues",
         }
 
-    def _collection(self) -> DataFrame | None:
+    def _fingerprint(self) -> tuple:
+        """Sorted (relpath, size, mtime_ns) of the collection's parquet
+        files: any write, overwrite or delete under index_dir changes it."""
+        out = []
+        for root, _dirs, files in os.walk(self.index_dir):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    path = os.path.join(root, fn)
+                    st = os.stat(path)
+                    rel = os.path.relpath(path, self.index_dir)
+                    out.append((rel, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+
+    def _collection(self) -> TopKSimilar | None:
+        """The collection as last written, opened once per snapshot."""
         if not os.path.exists(self.index_dir):
+            self._opened = None
             return None
-        return self.spark.read.parquet(self.index_dir)
+        fp = self._fingerprint()
+        opened = self._opened
+        if opened is None or opened[0] != fp:
+            opened = (fp, TopKSimilar(self.spark.read.parquet(self.index_dir)))
+            self._opened = opened
+        return opened[1]
 
     # ------------------------------------------------------ find_similar
     def find_similar(
@@ -100,23 +140,12 @@ class SimilarityService:
         reference api.py:107-114; per-item keys are the engine subset
         of github_similarity_service.py:415-424 (metadata columns the
         collection doesn't carry are omitted, not faked)."""
-        from deja_view_spark.operators.topk import topk_similar
-
-        emb = self._collection()
-        if emb is None:
+        topk = self._collection()
+        if topk is None:
             raise LookupError(f"no index at {self.index_dir}")
-        probe_rows = emb.where(F.col("doc_id") == doc_id).limit(1).collect()
-        if not probe_rows:
-            raise LookupError(f"doc {doc_id!r} not indexed")
         scope = {"repository": repository} if repository else None
-        rows = topk_similar(
-            emb,
-            probe_vector=list(probe_rows[0].vector),
-            probe_doc_id=doc_id,
-            top_k=top_k,
-            min_similarity=min_similarity,
-            scope=scope,
-        ).collect()
+        rows = topk(F.col("probe_id") == doc_id, top_k, scope).collect()
+        _, rows = split_self(rows, doc_id, top_k, min_similarity)
         similar = [
             {"doc_id": r.doc_id, "similarity": float(r.similarity)}
             for r in rows
@@ -130,10 +159,10 @@ class SimilarityService:
     # ------------------------------------------------------------- stats
     def stats(self) -> dict:
         """Reference github_similarity_service.py:428-441."""
-        emb = self._collection()
-        if emb is None:
+        topk = self._collection()
+        if topk is None:
             return {"total_issues": 0, "repositories": []}
-        agg = emb.agg(
+        agg = topk.emb.agg(
             F.count("*").alias("n"),
             F.sort_array(F.collect_set("repository")).alias("repos"),
         ).collect()[0]

@@ -3,7 +3,9 @@ surface as engine-backed methods — response shapes, lifecycle, and
 error paths."""
 
 import pytest
+from pyspark.sql import functions as F
 
+from deja_view_spark.functions.similarity import cosine_sim
 from deja_view_spark.service import SimilarityService
 from deja_view_spark.sources.catalog import load_table
 
@@ -97,3 +99,135 @@ def test_discussions_metrics_dataclass_shape(svc):
     assert len(out["top_upvoted"]) <= 5
     assert sum(out["category_breakdown"].values()) == out["total_discussions"]
     assert 0.0 <= out["answer_rate"] <= 100.0
+
+
+# --------------------------------------------------- find_similar plan
+def _literal_find_similar(emb, doc_id, top_k=5, min_similarity=0.0,
+                          repository=None):
+    """The formulation find_similar replaced, kept as the reference: a
+    separate probe lookup, then the probe vector folded into the plan
+    as literals, the probe excluded by doc_id."""
+    probe = emb.where(F.col("doc_id") == doc_id).limit(1).collect()
+    if not probe:
+        raise LookupError(f"doc {doc_id!r} not indexed")
+    df = emb.where(F.col("doc_id") != doc_id)
+    if repository:
+        df = df.where(F.col("repository") == repository)
+    lit = F.array(*[F.lit(float(x)) for x in probe[0].vector])
+    rows = (
+        df.withColumn("similarity", F.round(cosine_sim(F.col("vector"), lit, True), 4))
+        .where(F.col("similarity") >= min_similarity)
+        .orderBy(F.desc("similarity"), F.asc("doc_id"))
+        .limit(top_k)
+        .collect()
+    )
+    return [(r.doc_id, float(r.similarity)) for r in rows]
+
+
+def _pairs(out):
+    return [(i["doc_id"], i["similarity"]) for i in out["similar_issues"]]
+
+
+@pytest.fixture(scope="module")
+def two_repo(spark, docs, tmp_path_factory):
+    """16 docs, even doc_ids under r/even and odd ones under r/odd."""
+    small = docs.where(F.col("doc_id") < 16)
+    svc = SimilarityService(
+        spark, str(tmp_path_factory.mktemp("two_repo") / "idx"), dim=32
+    )
+    svc.index(small.where(F.col("doc_id") % 2 == 0), repository="r/even")
+    svc.index(small.where(F.col("doc_id") % 2 == 1), repository="r/odd")
+    return svc, [str(i) for i in range(16)]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"top_k": 3, "min_similarity": 0.8},
+        # scope excludes the probe's own repository (set per doc below)
+        {"top_k": 4, "other_repo": True},
+    ],
+    ids=["default", "min_similarity", "other_repo"],
+)
+def test_find_similar_equals_literal_probe_form(spark, two_repo, kw):
+    """find_similar (one probe-join plan) returns exactly what the
+    separate-lookup + literal-probe formulation returns: same ids,
+    same similarities, same order, for every doc."""
+    svc, ids = two_repo
+    emb = spark.read.parquet(svc.index_dir)
+    kw = dict(kw)
+    other = kw.pop("other_repo", False)
+    for doc_id in ids:
+        if other:
+            kw["repository"] = "r/even" if int(doc_id) % 2 else "r/odd"
+        want = _literal_find_similar(emb, doc_id, **kw)
+        got = _pairs(svc.find_similar(doc_id, **kw))
+        assert got == want, (doc_id, kw)
+        if other:
+            assert got and all(
+                (int(d) % 2) != (int(doc_id) % 2) for d, _ in got
+            )
+
+
+def test_find_similar_min_similarity_excludes_all(two_repo):
+    svc, _ = two_repo
+    out = svc.find_similar("3", top_k=5, min_similarity=1.01)
+    assert out["similar_issues"] == [] and out["count"] == 0
+
+
+def test_find_similar_duplicate_doc_id_fails_loudly(spark, docs, tmp_path):
+    """A doc_id indexed under two repositories has two vectors; the
+    lookup must not pick one arbitrarily (or return every neighbour
+    twice), it must raise, naming the doc."""
+    svc = SimilarityService(spark, str(tmp_path / "idx"), dim=32)
+    small = docs.where(F.col("doc_id") < 8)
+    svc.index(small, repository="r/a")
+    svc.index(small.where(F.col("doc_id") == 5), repository="r/b")
+    with pytest.raises(LookupError, match="'5' is not unique"):
+        svc.find_similar("5")
+    assert len(svc.find_similar("4", top_k=10)["similar_issues"]) == 8
+
+
+def test_find_similar_sees_index_clear_and_other_writers(spark, docs, tmp_path):
+    """The opened collection is re-opened whenever the files under
+    index_dir change: this service's own index()/clear(), and a rewrite
+    of the same dir by another SimilarityService instance."""
+    d = str(tmp_path / "idx")
+    svc = SimilarityService(spark, d, dim=32)
+    svc.index(docs.where(F.col("doc_id") < 8), repository="r/a")
+    assert svc.find_similar("3", top_k=20)["count"] == 7
+    svc.index(docs.where(F.col("doc_id").between(8, 11)), repository="r/b")
+    assert svc.find_similar("3", top_k=20)["count"] == 11
+    assert svc.find_similar("10", repository="r/a", top_k=20)["count"] == 8
+    assert svc.stats()["total_issues"] == 12
+
+    other = SimilarityService(spark, d, dim=32)
+    other.index(docs.where(F.col("doc_id").between(20, 21)), repository="r/a")
+    with pytest.raises(LookupError, match="not indexed"):
+        svc.find_similar("3")
+    assert svc.find_similar("20", top_k=20)["count"] == 5
+    assert svc.stats() == {"total_issues": 6, "repositories": ["r/a", "r/b"]}
+
+    svc.clear()
+    with pytest.raises(LookupError, match="no index"):
+        svc.find_similar("20")
+
+
+def test_warm_find_similar_runs_at_most_two_jobs(spark, two_repo):
+    """One plan per query over a collection opened once: the broadcast
+    exchange of the probe row and the top-k are the only Spark jobs
+    (each query runs in its own job group, which the broadcast job
+    inherits)."""
+    svc, _ = two_repo
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    svc.find_similar("3", top_k=5)  # opens the collection
+    try:
+        for doc_id in ("3", "6", "11"):
+            group = f"warm-find-similar-{doc_id}"
+            sc.setJobGroup(group, group)
+            svc.find_similar(doc_id, top_k=5)
+            assert 1 <= len(tracker.getJobIdsForGroup(group)) <= 2, doc_id
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -50,38 +50,29 @@ def cmd_index(args) -> int:
     return 0
 
 
-def _resolve_probe(spark, index_dir: str, ref: str):
-    """URL or bare doc_id -> (doc_id, vector). URL parsing is the
-    reference's owner/repo/issues/N triple (cli.py:84-90)."""
+def _probe(ref: str):
+    """URL or bare doc_id -> a condition on the index's probe_id (its
+    doc_id). URL parsing is the reference's owner/repo/issues/N triple
+    (cli.py:84-90)."""
     from deja_view_spark.functions.text import ISSUE_URL_RE
 
-    emb = spark.read.parquet(index_dir)
     if "github.com" in ref:
-        probe_df = emb.where(
-            F.regexp_extract(F.lit(ref), ISSUE_URL_RE, 4)
-            == F.regexp_extract(F.col("doc_id"), r"(\d+)$", 1)
+        return F.regexp_extract(F.lit(ref), ISSUE_URL_RE, 4) == F.regexp_extract(
+            F.col("probe_id"), r"(\d+)$", 1
         )
-    else:
-        probe_df = emb.where(F.col("doc_id") == ref)
-    row = probe_df.select("doc_id", "vector").head()
-    if row is None:
-        raise SystemExit(f"error: probe {ref!r} not found in index")
-    return row["doc_id"], [float(x) for x in row["vector"]], emb
+    return F.col("probe_id") == ref
 
 
 def cmd_find(args) -> int:
-    from deja_view_spark.operators.topk import topk_similar
+    from deja_view_spark.operators.topk import TopKSimilar, split_self
 
     spark = _spark(args.cores)
-    doc_id, vec, emb = _resolve_probe(spark, args.index, args.ref)
-    out = topk_similar(
-        emb,
-        vec,
-        probe_doc_id=doc_id,
-        top_k=args.top_k,
-        min_similarity=args.min_similarity,
-        convention="service",
-    ).collect()
+    topk = TopKSimilar(spark.read.parquet(args.index))
+    rows = topk(_probe(args.ref), args.top_k).collect()
+    try:
+        doc_id, out = split_self(rows, args.ref, args.top_k, args.min_similarity)
+    except LookupError as e:
+        raise SystemExit(f"error: {e.args[0]}") from None
     print(f"similar to {doc_id}:")
     for r in out:
         print(f"  {r['doc_id']}\t{r['similarity']:.4f}")

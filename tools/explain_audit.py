@@ -75,11 +75,12 @@ CHECKS = [
         [r"bit_count", r"Generate"],
         [r"ArrowEvalPython|BatchEvalPython"],
     ),
-    # single-probe top-k: literal probe folded in, sorted limit compiles
-    # to TakeOrdered (no global sort), no join at all
+    # single-probe top-k: the probe row broadcast into a nested-loop
+    # join, sorted limit compiles to TakeOrdered (no global sort), no
+    # shuffle join
     (
         "topk_probe",
-        [r"TakeOrdered"],
+        [r"TakeOrdered", r"BroadcastNestedLoopJoin"],
         [r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"],
     ),
     # composed scoring pipeline: pure column expressions + TakeOrdered
