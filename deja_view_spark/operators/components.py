@@ -1,36 +1,100 @@
 """Connected components over the similarity graph (canonicalization).
 
-Two dependency-free algorithms (SURVEY §4 conclusion, §7.2 step 5),
-both returning the same deterministic labeling (component = min id):
+One algorithm: the alternating large-star / small-star rounds of
+Kiveris et al., "Connected Components in MapReduce and Beyond"
+(SoCC'14). Each round rewires every edge toward the smaller end of its
+neighbourhood, so a component of diameter d collapses in O(log d)
+rounds, and a long chain needs few of them.
 
-- ``connected_components`` — GraphFrames-style label propagation:
-  every vertex starts labeled with itself; each round every vertex
-  takes the min label among itself and its neighbors. Rounds needed =
-  graph DIAMETER. Duplicate clusters are tiny cliques (diameter 1-2),
-  so this converges in ~3 rounds with ONE shuffle+agg per round — the
-  pipeline's default, cheapest on its actual graph shape.
+- large star: every vertex links its strictly larger neighbours to the
+  minimum of its closed neighbourhood;
+- small star: every vertex links itself and its smaller neighbours to
+  the minimum of that set.
 
-- ``connected_components_alternating`` — the alternating large-star /
-  small-star algorithm (Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14): each round rewires edges toward
-  local minima, halving component depth, so convergence is
-  O(log diameter) rounds. The scale path for ARBITRARY graphs — a
-  100 TB mention/link graph can contain chains far longer than any
-  fixed round budget, where label propagation under ``max_iter``
-  would silently mislabel.
+Exit test. The loop stops when the mirrored edge set is a forest of
+stars centred on their minimum: every vertex either has only larger
+neighbours (a centre) or exactly one neighbour, smaller than itself (a
+leaf). Each vertex's label is then the least of itself and its
+smallest neighbour, so the output is component = min id, isolated
+``vertices`` and self-loop-only vertices labelling themselves. The
+test is one window over the ``a``-partitioned edge table, counted
+through ``observe`` by the very job that checkpoints the table, and it
+runs before round 1: a graph that already is a star forest (disjoint
+pairs, say) takes zero rounds; cliques such as duplicate clusters of
+four take one.
+
+The round cap ``MAX_ROUNDS`` only guards against a broken invariant
+(a path of 3000 shuffled ids takes 10 rounds); hitting it raises
+``RuntimeError`` rather than returning a partial labeling.
 
 Scale notes:
-- every round of either algorithm is key-partitioned shuffles that
-  AQE coalesces;
-- ``localCheckpoint`` each round cuts the exponentially growing plan
-  lineage (SURVEY §7.4.4) — without it Catalyst re-analyzes a 2^k-deep
-  plan.
+- every round is two hash shuffles on ``a`` plus the checkpointing
+  job; the loop's width is sized from the first check's row count
+  (~250k mirrored edge rows per partition, floored at 4, capped at the
+  session width), not the session's data-sized width, because task
+  launch dominates rounds over a small edge set. Explicit
+  ``repartition(p, "a")``, not a conf set, so a job planning
+  concurrently (the pipeline overlaps CC with the triples write) never
+  sees a narrowed setting;
+- ``localCheckpoint`` each round cuts the growing plan lineage
+  (SURVEY §7.4.4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+MAX_ROUNDS = 64
+_ROWS_PER_PARTITION = 250_000
+
+
+def _pairs(*pairs: tuple[Column, Column]) -> Column:
+    """Column expression exploding each (a, b) column pair to a row."""
+    return F.explode(
+        F.array(*[F.struct(x.alias("a"), y.alias("b")) for x, y in pairs])
+    ).alias("e")
+
+
+def _checkpoint(und: DataFrame, p: int | None) -> tuple[DataFrame, dict]:
+    """Deduplicate ``und`` on (a, b), annotate every row with the min
+    (``lo``) and max (``hi``) of a's neighbours other than itself, and
+    checkpoint it. The checkpointing job also returns the row count and
+    the number of vertices off a star (``loose``); a vertex's row with
+    ``b == lo`` is unique, so counting on it counts vertices."""
+    part = und.repartition(p, "a") if p else und.repartition("a")
+    a, b = F.col("a"), F.col("b")
+    nbr = F.when(b != a, b)
+    w = Window.partitionBy("a")
+    ann = part.distinct().select(
+        "a", "b", F.min(nbr).over(w).alias("lo"), F.max(nbr).over(w).alias("hi")
+    )
+    lo, hi = F.col("lo"), F.col("hi")
+    star = (lo > a) | ((hi < a) & (lo == hi))
+    obs = Observation()
+    ann = ann.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count(F.when((b == lo) & ~star, 1)).alias("loose"),
+    ).localCheckpoint(eager=True)
+    return ann, obs.get
+
+
+def _round(ann: DataFrame, p: int) -> DataFrame:
+    """One large-star then one small-star step, mirrored for the next
+    check. Large-star edges always point larger -> smaller, so grouping
+    them on ``a`` gives each vertex its smaller neighbours, which is all
+    the small star reads."""
+    a, b, m = F.col("a"), F.col("b"), F.col("m")
+    ls = ann.where(b > a).select(b.alias("a"), F.least(a, "lo").alias("b"))
+    ss = ls.repartition(p, "a").withColumn(
+        "m", F.min("b").over(Window.partitionBy("a"))
+    )
+    return (
+        ss.select(_pairs((b, m), (m, b), (a, m), (m, a)))
+        .select("e.*")
+        .where(a != b)
+    )
 
 
 def connected_components(
@@ -38,211 +102,42 @@ def connected_components(
     vertices: DataFrame | None = None,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Return (id, component) with component = min id in the component.
 
-    ``edges`` is treated as undirected. ``vertices`` (single column
-    ``id``) optionally adds isolated vertices.
-
-    ``loop_partitions`` bounds the per-round shuffle width. The loop's
-    tables are tiny (the duplicate-edge graph is a few % of the
-    corpus), but each round's join/agg would otherwise inherit the
-    session's data-sized ``spark.sql.shuffle.partitions`` — at 32
-    cores that is ~384 near-empty tasks per round, and task launch
-    dominates (measured 2-2.5x the whole CC wall; AQE coalescing does
-    not rescue the loop because each round re-plans from a
-    checkpoint). None = auto: ~250k undirected edge rows per
-    partition, floored at 4 — for a genuinely huge edge set this
-    matches the session width and changes nothing. Implemented with
-    explicit ``repartition(p, key)`` co-partitioning, NOT a session
-    conf set, so a concurrently-planning job (the pipeline overlaps
-    CC with the triples write) can never observe a narrowed setting."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if loop_partitions is None:
-        sess_w = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        # one count up front sizes the loop; in the pipeline the edge
-        # set arrives checkpointed so this is a metadata-cheap scan
-        loop_partitions = max(4, min(sess_w, edges.count() // 125_000 + 1))
-    p = loop_partitions
-
-    # repartition(p, b) BEFORE distinct: HashPartitioning(b) satisfies
-    # the distinct's ClusteredDistribution(a, b) (hash keys ⊆ cluster
-    # keys), so the dedup runs at width p with no second exchange AND
-    # leaves the edge side hash(b)-partitioned — exactly what every
-    # round's join needs
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .repartition(p, "b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    verts = und.select(F.col("a").alias("id")).repartition(p, "id").distinct()
+    ``edges`` is treated as undirected; a self-loop ``(v, v)`` labels
+    ``v`` even when it has no other edge. ``vertices`` (single column
+    ``id``) optionally adds isolated vertices. Raises ``RuntimeError``
+    when the graph is still not a star forest after ``MAX_ROUNDS``."""
+    a, b = F.col(src), F.col(dst)
+    und = edges.select(_pairs((a, b), (b, a))).select("e.*")
     if vertices is not None:
-        verts = (
-            verts.unionByName(vertices.select("id"))
-            .repartition(p, "id")
-            .distinct()
-        )
+        # isolated vertices ride along as self-loops
+        v = F.col("id")
+        und = und.unionByName(vertices.select(v.alias("a"), v.alias("b")))
+    first, stats = _checkpoint(und, None)
+    sess_w = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = max(4, min(sess_w, stats["rows"] // _ROWS_PER_PARTITION + 1))
 
-    labels = verts.select("id", F.col("id").alias("component")).localCheckpoint(
-        eager=True
-    )
-
-    for _ in range(max_iter):
-        # neighbor labels: for edge (a,b), a receives b's current label.
-        # The previous label rides along as `old` (unique non-null per
-        # id), so convergence is read off the SAME aggregation — no
-        # extra labels-vs-labels join per round.
-        nbr = und.join(
-            labels.withColumnRenamed("id", "b").repartition(p, "b"), "b"
-        ).select(
-            F.col("a").alias("id"),
-            "component",
-            F.lit(None).cast(labels.schema["component"].dataType).alias("old"),
-        )
-        # LAZY checkpoint: the convergence count below is the job that
-        # materializes it (persisted partitions are written as that job
-        # computes them), so each round costs ONE job, not a separate
-        # eager-checkpoint job plus a count job. Full count (no
-        # limit(1)): a short-circuited job would leave partitions
-        # unpersisted and re-derive the whole lineage next round.
-        new_labels = (
-            labels.withColumn("old", F.col("component"))
-            .unionByName(nbr)
-            .repartition(p, "id")
-            .groupBy("id")
-            .agg(
-                F.min("component").alias("component"),
-                F.min("old").alias("old"),  # min ignores nulls -> prev label
+    ann, rounds = first, 0
+    while stats["loose"]:
+        if rounds == MAX_ROUNDS:
+            raise RuntimeError(
+                f"connected_components: {stats['loose']} vertices are not on a "
+                f"star after {rounds} rounds"
             )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.where(F.col("component") != F.col("old")).count()
-        labels = new_labels.drop("old")
-        if changed == 0:
-            break
-    return labels
+        ann, stats = _checkpoint(_round(ann, p), p)
+        rounds += 1
 
-
-def _large_star(und: DataFrame) -> DataFrame:
-    """One large-star round: every node connects its STRICTLY LARGER
-    neighbors to the minimum of its closed neighborhood. Keeps every
-    component connected while pushing depth toward a star."""
-    m = und.groupBy("a").agg(
-        F.least(F.min("b"), F.first("a")).alias("m")
-    )
+    # one row per vertex: its row on its smallest neighbour, or, for a
+    # vertex with no neighbour but itself, its self-loop in the first
+    # table (rounds never carry such vertices, so the two are disjoint)
     return (
-        und.join(m, "a")
-        .where(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-    )
-
-
-def _small_star(und: DataFrame) -> DataFrame:
-    """One small-star round: every node connects its NOT-LARGER
-    neighbors (and itself) to the minimum of that set."""
-    le = und.where(F.col("b") <= F.col("a"))
-    m = le.groupBy("a").agg(F.min("b").alias("m"))
-    nodes = le.select("a", F.col("a").alias("b")).unionByName(le)
-    return (
-        nodes.join(m, "a")
-        .where(F.col("b") != F.col("m"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-    )
-
-
-def connected_components_alternating(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    loop_partitions: int | None = None,
-) -> DataFrame:
-    """(id, component) labeling via alternating large-star/small-star
-    — O(log diameter) rounds, the general-graph scale path (see module
-    docstring). Output is identical to ``connected_components`` on the
-    same graph: component = min id, isolated ``vertices`` label
-    themselves.
-
-    ``loop_partitions`` bounds the per-round shuffle width, same
-    discipline as ``connected_components`` (commit a6a069d measured
-    task launch at 2-2.5x the CC wall when the loop's tiny round
-    tables inherit the session's data-sized width): every per-round
-    ``distinct`` is fronted by an explicit ``repartition(p, "a")`` —
-    hash(a) is a subset of the distinct's (a, b) cluster keys, so the
-    dedup runs at width p with no second exchange and leaves each
-    table hash(a)-partitioned for the star rounds' groupBy("a")/
-    join("a") and the convergence anti-join. None = auto: ~250k edge
-    rows per partition, floored at 4, capped at the session width.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    if loop_partitions is None:
-        sess_w = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        loop_partitions = max(4, min(sess_w, e.count() // 125_000 + 1))
-    p = loop_partitions
-
-    all_verts = e.select("a").unionByName(e.select(F.col("b").alias("a")))
-    if vertices is not None:
-        all_verts = all_verts.unionByName(vertices.select(F.col("id").alias("a")))
-    all_verts = (
-        all_verts.repartition(p, "a").distinct().localCheckpoint(eager=True)
-    )
-
-    cur = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .repartition(p, "a")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # large-star output is asymmetric; re-mirror so each node sees
-        # its full neighborhood next round
-        ls = _large_star(cur)
-        und = (
-            ls.unionByName(ls.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .repartition(p, "a")
-            .distinct()
-        )
-        ss = (
-            _small_star(und)
-            .where(F.col("a") != F.col("b"))
-            .repartition(p, "a")
-            .distinct()
-        )
-        nxt = (
-            ss.unionByName(ss.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .repartition(p, "a")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # converged when the (mirrored) edge set is unchanged:
-        # equal cardinality AND no additions <=> set equality. The
-        # anti-join materializes nxt's lazy checkpoint in the same job.
-        additions = nxt.join(cur, ["a", "b"], "left_anti").count()
-        same_size = cur.count() == nxt.count()
-        cur = nxt
-        if additions == 0 and same_size:
-            break
-    # star edges point larger->min; component(node) = its min neighbor,
-    # roots and isolated vertices label themselves
-    comp = cur.groupBy("a").agg(F.min("b").alias("component"))
-    return (
-        all_verts.join(comp, "a", "left")
-        .select(
-            F.col("a").alias("id"),
-            F.coalesce(
-                F.least(F.col("component"), F.col("a")), F.col("a")
-            ).alias("component"),
+        ann.where(F.col("b") == F.col("lo"))
+        .select(F.col("a").alias("id"), F.least("a", "lo").alias("component"))
+        .unionByName(
+            first.where(F.col("lo").isNull()).select(
+                F.col("a").alias("id"), F.col("a").alias("component")
+            )
         )
     )

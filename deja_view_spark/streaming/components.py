@@ -11,8 +11,9 @@ incrementally:
   per batch of new edges
     1. map both endpoints through the current labels (unseen node ->
        itself): each new edge becomes an edge between component ROOTS;
-    2. run CC on the tiny root graph only (alternating star — the
-       batch's root graph is orders smaller than the node set);
+    2. run connected_components on the root graph only: it is bounded
+       by the batch's edges, orders smaller than the node set, and the
+       star loop sizes its shuffle width from it;
     3. re-root the existing label table and the batch's nodes with one
        hash join each;
     4. persist the new labeling as a VERSIONED snapshot + pointer file
@@ -43,9 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deja_view_spark.operators.components import (
-    connected_components_alternating,
-)
+from deja_view_spark.operators.components import connected_components
 
 _SCHEMA = "id long, component long"
 
@@ -113,18 +112,7 @@ class IncrementalComponents:
         )
         n_pairs = root_pairs.count()
         if n_pairs:
-            # size the root-graph CC loop from the count we already
-            # paid for: the batch's root graph is tiny next to the
-            # session's data-sized shuffle width, and the loop would
-            # otherwise launch ~sess_width near-empty tasks per round
-            # (the overhead commit a6a069d measured at 2-2.5x CC wall)
-            sess_w = int(
-                self.spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
-            loop_p = max(4, min(sess_w, n_pairs // 125_000 + 1))
-            remap = connected_components_alternating(
-                root_pairs, src="a", dst="b", loop_partitions=loop_p
-            ).select(
+            remap = connected_components(root_pairs, src="a", dst="b").select(
                 F.col("id").alias("root"), F.col("component").alias("new_root")
             )
         else:

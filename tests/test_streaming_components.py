@@ -5,9 +5,7 @@ chopped), crash-safe versioned state, and the foreachBatch wiring."""
 
 from pyspark.sql import functions as F
 
-from deja_view_spark.operators.components import (
-    connected_components_alternating,
-)
+from deja_view_spark.operators.components import connected_components
 from deja_view_spark.streaming.components import IncrementalComponents
 
 
@@ -18,9 +16,7 @@ def _edges_df(spark, pairs):
 def _full_cc(spark, pairs):
     return {
         r.id: r.component
-        for r in connected_components_alternating(
-            _edges_df(spark, pairs)
-        ).collect()
+        for r in connected_components(_edges_df(spark, pairs)).collect()
     }
 
 
