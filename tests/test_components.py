@@ -37,6 +37,25 @@ def test_two_components_and_isolated(spark):
     }
 
 
+def test_alternating_two_components_and_isolated(spark):
+    """The same graph given with reversed and duplicated edges, custom
+    column names, and a vertex list that overlaps the edges."""
+    edges = spark.createDataFrame(
+        [("b", "a"), ("a", "b"), ("c", "b"), ("y", "x"), ("x", "y")],
+        "left string, right string",
+    )
+    verts = spark.createDataFrame(
+        [("a",), ("b",), ("c",), ("x",), ("y",), ("z",)], "id string"
+    )
+    got = {
+        r.id: r.component
+        for r in connected_components(
+            edges, vertices=verts, src="left", dst="right"
+        ).collect()
+    }
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
+
+
 def test_chain_converges(spark):
     # a long path exercises multi-round propagation
     edges = spark.createDataFrame(
