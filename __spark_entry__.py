@@ -12,13 +12,14 @@ pre-registered DuckDB view).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from deja_view_spark import queries as Q  # noqa: E402
 from deja_view_spark.deploy import ensure_py_files  # noqa: E402

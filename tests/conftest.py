@@ -1,8 +1,12 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine and tools, whichever directory it sits in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(1, os.path.join(ROOT, "tools"))
 
 from deja_view_spark.session import get_spark  # noqa: E402
 

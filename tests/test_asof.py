@@ -2,14 +2,10 @@
 plus edge cases: no-match rows, equal-timestamp inclusivity, tie
 resolution, and parallelism-invariance of the result set."""
 
-import sys
-
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from deja_view_spark.operators.asof import asof_join  # noqa: E402
+from deja_view_spark.operators.asof import asof_join
 
 
 def _mk(spark, rows, schema):

@@ -2,15 +2,11 @@
 Exchange on either side (the shuffle was paid at write time), and the
 results must match a plain join of the unbucketed frames."""
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from deja_view_spark.sources.bucketed import (  # noqa: E402
+from deja_view_spark.sources.bucketed import (
     bucketed_join,
     write_bucketed,
 )

@@ -3,11 +3,8 @@ spool-transport receipts match the input exactly."""
 
 import glob
 import json
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from deja_view_spark.sources.labelsink import write_labels  # noqa: E402
+from deja_view_spark.sources.labelsink import write_labels
 
 
 def test_write_labels_spools_every_row(spark, tmp_path):

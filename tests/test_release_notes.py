@@ -2,7 +2,6 @@
 tier classification, section structure, contributor footer, CLI verb."""
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,7 +133,6 @@ def test_section_counts_match_release_tiers_aggregate(spark):
 
 
 def test_cli_release_notes_smoke(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     out = str(tmp_path / "notes.md")

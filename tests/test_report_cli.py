@@ -80,9 +80,6 @@ def test_json_roundtrip(edges, tmp_path):
 def test_cli_end_to_end(spark, tmp_path, capsys):
     """index -> find -> find-duplicates -> suggest-discussions ->
     metrics, all in-process on the sf0.001 corpus."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     docs = str(tmp_path / "docs.parquet")
@@ -96,6 +93,11 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert cli.main(["find", "3", "--index", index, "-k", "3"]) == 0
     out = capsys.readouterr().out
     assert "similar to 3" in out
+    url = "https://github.com/acme/widgets/issues/3"
+    assert cli.main(["find", url, "--index", index, "-k", "3"]) == 0
+    assert capsys.readouterr().out in out
+    with pytest.raises(SystemExit, match="not indexed"):
+        cli.main(["find", "https://github.com/acme/widgets/issues/999999", "--index", index])
 
     report = str(tmp_path / "dups.md")
     assert (
@@ -134,9 +136,6 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
 def test_cli_graph_verbs(spark, tmp_path, capsys):
     """graph stats / clusters / neighbors / two-hop over a small built
     kg_triples dir."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     from deja_view_spark.datagen import generate_repos
@@ -208,9 +207,6 @@ def test_cli_graph_verbs(spark, tmp_path, capsys):
 def test_cli_corpus_verbs(spark, tmp_path, capsys):
     """corpus sample-weighted / kmeans / lm-filter over the sf0.001
     testdata dir — the registry operators behind a UX verb."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     out = str(tmp_path / "sample.parquet")
@@ -239,9 +235,6 @@ def test_cli_corpus_verbs(spark, tmp_path, capsys):
 def test_cli_round3_verbs(spark, tmp_path, capsys):
     """corpus novelty / cross-source-dedup / pq-encode and the graph
     reach verb over a built triples dir."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     assert (
@@ -285,9 +278,6 @@ def test_cli_round3_verbs(spark, tmp_path, capsys):
 def test_cli_wave45_verbs(spark, capsys):
     """Smoke the wave-4/5 corpus verbs end-to-end through the CLI
     surface (one sketch, one dedup, one retrieval, one analytics)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     for verb, marker in (
@@ -307,9 +297,6 @@ def test_cli_wave14_20_verbs(capsys):
     """The wave-14-20 UX verbs: KG analytics, SQ8 retrieval, CUPED,
     sessionization, robust stats — each routes to its oracle-checked
     registry operator."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     assert (
@@ -349,9 +336,6 @@ def test_cli_wave14_20_verbs(capsys):
 
 def test_cli_wave21_30_verbs(capsys):
     """Spot-check the wave-21-30 verbs route to their operators."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     for verb, col in [

@@ -2,10 +2,19 @@
 surface as engine-backed methods — response shapes, lifecycle, and
 error paths."""
 
+import shutil
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from deja_view_spark.functions.similarity import cosine_sim
+from deja_view_spark.functions.similarity import cosine_sim, dot
+from deja_view_spark.operators.topk import (
+    Snapshot,
+    TopKSimilar,
+    spark_round,
+    visible_parquet_files,
+)
 from deja_view_spark.service import SimilarityService
 from deja_view_spark.sources.catalog import load_table
 
@@ -214,20 +223,116 @@ def test_find_similar_sees_index_clear_and_other_writers(spark, docs, tmp_path):
         svc.find_similar("20")
 
 
-def test_warm_find_similar_runs_at_most_two_jobs(spark, two_repo):
-    """One plan per query over a collection opened once: the broadcast
-    exchange of the probe row and the top-k are the only Spark jobs
-    (each query runs in its own job group, which the broadcast job
-    inherits)."""
-    svc, _ = two_repo
+def _spark_jobs(spark, name, fn):
+    """Run fn() in its own job group; the number of Spark jobs it ran."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    svc.find_similar("3", top_k=5)  # opens the collection
+    sc.setJobGroup(name, name)
     try:
-        for doc_id in ("3", "6", "11"):
-            group = f"warm-find-similar-{doc_id}"
-            sc.setJobGroup(group, group)
-            svc.find_similar(doc_id, top_k=5)
-            assert 1 <= len(tracker.getJobIdsForGroup(group)) <= 2, doc_id
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_find_similar_opens_and_reads_with_zero_jobs(spark, two_repo):
+    """Reads are answered from the snapshot held on the driver: opening
+    it (a fresh service's first read) and every warm read run no Spark
+    job."""
+    svc, _ = two_repo
+    fresh = SimilarityService(spark, svc.index_dir, dim=32)
+    assert _spark_jobs(spark, "open-find-similar", lambda: fresh.find_similar("3")) == 0
+    for doc_id in ("3", "6", "11"):
+        group = f"warm-find-similar-{doc_id}"
+        assert _spark_jobs(spark, group, lambda: fresh.find_similar(doc_id)) == 0
+
+
+def test_stats_runs_no_spark_job(spark, two_repo):
+    svc, _ = two_repo
+    fresh = SimilarityService(spark, svc.index_dir, dim=32)
+    out = {}
+    assert _spark_jobs(spark, "stats", lambda: out.update(fresh.stats())) == 0
+    assert out == {"total_issues": 16, "repositories": ["r/even", "r/odd"]}
+
+
+def test_staged_and_temporary_files_are_not_read(spark, docs, tmp_path):
+    """Files a Spark read of the index skips (task-commit _temporary/,
+    dynamic-overwrite .spark-staging-*/) change neither find_similar nor
+    stats: not for a service that has the snapshot open, and not for
+    one that opens it afterwards."""
+    d = tmp_path / "idx"
+    svc = SimilarityService(spark, str(d), dim=32)
+    svc.index(docs.where(F.col("doc_id") < 12), repository="r/a")
+    before = (svc.find_similar("3", top_k=20), svc.stats())
+    part = next((d / "repository=r%2Fa").glob("part-*.parquet"))
+    for staged in (d / "_temporary" / "0", d / ".spark-staging-x" / "repository=r%2Fa"):
+        staged.mkdir(parents=True)
+        shutil.copy(part, staged / part.name)
+    assert spark.read.parquet(str(d)).count() == 12
+    assert (svc.find_similar("3", top_k=20), svc.stats()) == before
+    fresh = SimilarityService(spark, str(d), dim=32)
+    assert (fresh.find_similar("3", top_k=20), fresh.stats()) == before
+
+
+def test_ragged_vectors_raise(spark, tmp_path):
+    """A vector of another length (Spark's zip_with would pad it with
+    nulls and rank it anyway) fails the open."""
+    d = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.0, 1.0]), ("c", [1.0])],
+        "doc_id string, vector array<float>",
+    ).write.parquet(d)
+    svc = SimilarityService(spark, d, dim=2)
+    with pytest.raises(ValueError, match="ragged"):
+        svc.find_similar("a")
+    with pytest.raises(ValueError, match="ragged"):
+        svc.stats()
+
+
+def test_spark_round_matches_spark(spark):
+    """spark_round is Spark's round(x, 4): HALF_UP on the shortest
+    decimal repr (np.round gives 0.1234 for 0.12345), and a zero result
+    has no sign."""
+    xs = [
+        y
+        for x in (0.12345, 0.99995, 0.00005, 0.85, 0.84995, -0.12345, -0.00001)
+        for y in (np.nextafter(x, -np.inf), x, np.nextafter(x, np.inf))
+    ]
+    want = spark.range(1).select(
+        *[F.round(F.lit(float(x)), 4).alias(f"x{i}") for i, x in enumerate(xs)]
+    ).first()
+    # repr tells 0.0 from -0.0
+    assert list(map(repr, spark_round(np.array(xs)).tolist())) == list(map(repr, want))
+
+
+def test_snapshot_scores_are_spark_dot_bit_for_bit(spark, tmp_path):
+    """Unrounded, the resident scores equal Spark's dot product of the
+    float vectors with the probe as a double literal, to the last bit
+    (float32 products, or a BLAS sum in another order, would not)."""
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((50, 48)).astype(np.float32)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    d = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [(f"d{i}", v.tolist()) for i, v in enumerate(vecs)],
+        "doc_id string, vector array<float>",
+    ).write.parquet(d)
+    snap = Snapshot.read(d, visible_parquet_files(d))
+    emb = spark.read.parquet(d)
+    for i in (0, 17, 49):
+        probe = F.array(*[F.lit(float(x)) for x in vecs[i]])
+        want = dict(emb.select("doc_id", dot(F.col("vector"), probe)).collect())
+        got = dict(zip(snap.doc_ids, snap.scores(snap.rows(f"d{i}")[0]).tolist()))
+        assert got == want
+
+
+def test_find_similar_equals_spark_plan_with_ties(spark, docs, tmp_path):
+    """At dim 4 many similarities tie after rounding, so the k-th place
+    is shared and doc_id decides: the resident top-k equals the Spark
+    plan (TopKSimilar) for every probe."""
+    svc = SimilarityService(spark, str(tmp_path / "idx"), dim=4)
+    svc.index(docs.where(F.col("doc_id") < 60), repository="r/a")
+    topk = TopKSimilar(spark.read.parquet(svc.index_dir))
+    for doc_id in map(str, range(60)):
+        rows = topk(F.col("probe_id") == doc_id, 7).collect()
+        want = [(r.doc_id, r.similarity) for r in rows if not r.is_self][:7]
+        assert _pairs(svc.find_similar(doc_id, top_k=7)) == want, doc_id

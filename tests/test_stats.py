@@ -439,9 +439,6 @@ def test_crossval_folds_partition_and_balance(spark):
 
 # -------------------------------------------------- CLI verbs (wave 9)
 def test_wave9_cli_verbs(capsys):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     for verb, marker in (

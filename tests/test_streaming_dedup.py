@@ -3,14 +3,11 @@ driven with availableNow drains; batch operators are the equivalence
 oracle, and dedup state must carry across separate query runs via the
 checkpoint."""
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from deja_view_spark.streaming.dedup import (  # noqa: E402
+from deja_view_spark.streaming.dedup import (
     purchases_after_clicks,
     stream_dedup_docs,
     stream_purchases_after_clicks,

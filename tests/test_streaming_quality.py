@@ -4,12 +4,9 @@ availableNow drains with the BATCH transform as the equivalence oracle
 pure-Python re-checks pin the semantics)."""
 
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from deja_view_spark.queries_quality import PII_BANKS  # noqa: E402
-from deja_view_spark.streaming.quality import (  # noqa: E402
+from deja_view_spark.queries_quality import PII_BANKS
+from deja_view_spark.streaming.quality import (
     pii_scrub_transform,
     quality_gate_transform,
     stream_pii_scrub,

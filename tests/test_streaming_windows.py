@@ -3,16 +3,13 @@ the applyInPandasWithState running-count operator, driven with
 availableNow drains over a watched parquet directory — state must
 carry across separate query runs via the checkpoint."""
 
-import sys
 from datetime import datetime
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from deja_view_spark.streaming.windows import (  # noqa: E402
+from deja_view_spark.streaming.windows import (
     stream_running_user_counts,
     stream_windowed_counts,
     windowed_event_counts,

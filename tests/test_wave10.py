@@ -134,9 +134,6 @@ def test_burstiness_matches_python(spark):
 
 
 def test_wave10_cli_verbs(capsys):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     for verb, marker in (

@@ -186,9 +186,6 @@ def test_wave7_registry_shapes(spark):
 def test_cli_wave7_verbs(tmp_path, capsys):
     """The wave-6/7 corpus verbs resolve through the registry and run
     end-to-end on the sf0.001 layout."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import cli
 
     assert cli.main(["corpus", "transitions", "--data", SF, "--limit", "3"]) == 0

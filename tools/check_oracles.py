@@ -13,7 +13,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deja_view_spark.session import get_spark  # noqa: E402
 from deja_view_spark.sources.catalog import TESTDATA_TABLES  # noqa: E402

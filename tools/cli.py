@@ -20,9 +20,11 @@ parquet (doc_id, vector) written by `index`.
 from __future__ import annotations
 
 import argparse
+import os
+import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -50,32 +52,39 @@ def cmd_index(args) -> int:
     return 0
 
 
-def _probe(ref: str):
-    """URL or bare doc_id -> a condition on the index's probe_id (its
-    doc_id). URL parsing is the reference's owner/repo/issues/N triple
-    (cli.py:84-90)."""
+def _extract(pattern: str, s: str, group: int) -> str:
+    """Spark's regexp_extract: the group of the first match, else ""."""
+    m = re.search(pattern, s)
+    return m.group(group) if m else ""
+
+
+def _probe(snap, ref: str) -> list[int]:
+    """URL or bare doc_id -> the index rows it names. A URL names the
+    doc_ids whose trailing number is its issue number; URL parsing is
+    the reference's owner/repo/issues/N triple (cli.py:84-90)."""
     from deja_view_spark.functions.text import ISSUE_URL_RE
 
-    if "github.com" in ref:
-        return F.regexp_extract(F.lit(ref), ISSUE_URL_RE, 4) == F.regexp_extract(
-            F.col("probe_id"), r"(\d+)$", 1
-        )
-    return F.col("probe_id") == ref
+    if "github.com" not in ref:
+        return snap.rows(ref)
+    number = _extract(ISSUE_URL_RE, ref, 4)
+    return [
+        i for i, d in enumerate(snap.doc_ids) if _extract(r"(\d+)$", d, 1) == number
+    ]
 
 
 def cmd_find(args) -> int:
-    from deja_view_spark.operators.topk import TopKSimilar, split_self
+    from deja_view_spark.operators.topk import Snapshot, visible_parquet_files
 
-    spark = _spark(args.cores)
-    topk = TopKSimilar(spark.read.parquet(args.index))
-    rows = topk(_probe(args.ref), args.top_k).collect()
+    snap = Snapshot.read(args.index, visible_parquet_files(args.index))
     try:
-        doc_id, out = split_self(rows, args.ref, args.top_k, args.min_similarity)
+        doc_id, out = snap.top_k(
+            _probe(snap, args.ref), args.ref, args.top_k, args.min_similarity
+        )
     except LookupError as e:
         raise SystemExit(f"error: {e.args[0]}") from None
     print(f"similar to {doc_id}:")
-    for r in out:
-        print(f"  {r['doc_id']}\t{r['similarity']:.4f}")
+    for d, sim in out:
+        print(f"  {d}\t{sim:.4f}")
     return 0
 
 

@@ -14,11 +14,12 @@ Exits non-zero if an expected plan property is missing.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deja_view_spark.session import get_spark  # noqa: E402
 from deja_view_spark import queries as Q  # noqa: E402

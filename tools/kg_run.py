@@ -21,11 +21,12 @@ from __future__ import annotations
 import argparse
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deja_view_spark.datagen import generate_repos  # noqa: E402
 from deja_view_spark.plans.pipeline import KGPipeline  # noqa: E402

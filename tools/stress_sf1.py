@@ -27,13 +27,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -374,7 +375,7 @@ def main() -> None:
             out = subprocess.run(
                 [
                     sys.executable,
-                    "/root/repo/tools/kg_run.py",
+                    os.path.join(os.path.dirname(os.path.abspath(__file__)), "kg_run.py"),
                     "--cores",
                     str(args.cores),
                     "--rows",

@@ -12,13 +12,14 @@ Usage: python tools/tune_lsh.py [n_rows] [threshold] [method]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections import defaultdict
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
