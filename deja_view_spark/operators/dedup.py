@@ -20,7 +20,7 @@ from deja_view_spark.functions.hashing import (
     make_minhash_bands_udf,
     make_simhash64_udf,
 )
-from deja_view_spark.operators.selfjoin import _pairs_from_band_table
+from deja_view_spark.operators.selfjoin import band_pairs
 
 
 def minhash_candidate_pairs(
@@ -31,18 +31,17 @@ def minhash_candidate_pairs(
     rows: int = 4,
     shingle_k: int = 3,
     seed: int = 7,
-    max_bucket: int = 200,
 ) -> DataFrame:
     """Distinct candidate (src_doc < dst_doc) pairs whose MinHash band
-    signatures collide — the shingle->minhash->band->bucket-join
-    pipeline."""
+    signatures collide — the shingle->minhash->band->band-join
+    pipeline (operators/selfjoin.band_pairs)."""
     mh = make_minhash_bands_udf(bands=bands, rows=rows, shingle_k=shingle_k, seed=seed)
     bt = docs.select(
         F.col(id_col).alias("doc_id"),
         F.lit("").alias("_scope"),
         F.explode(mh(F.col(text_col))).alias("band"),
     )
-    return _pairs_from_band_table(bt, max_bucket).select(
+    return band_pairs(bt).select(
         F.col("src").alias("src_doc"), F.col("dst").alias("dst_doc")
     )
 

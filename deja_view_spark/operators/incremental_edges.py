@@ -264,14 +264,10 @@ class IncrementalDuplicates:
 
     def components(self) -> DataFrame:
         """(id, component) over the trimmed edge graph — the same
-        canonicalization the batch pipeline derives (CC over top-k
-        edges), recomputed from the edge-sized store."""
-        return connected_components(
-            self.edges().where(F.col("src") < F.col("dst")),
-            None,
-            "src",
-            "dst",
-        )
+        canonicalization the batch pipeline derives (CC over ALL top-k
+        edges: a pair that top-k kept in one direction only still
+        joins its component), recomputed from the edge-sized store."""
+        return connected_components(self.edges(), None, "src", "dst")
 
     # ------------------------------------------------------- streaming
     def attach_stream(self, emb_stream: DataFrame, checkpoint_dir: str):

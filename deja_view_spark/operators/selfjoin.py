@@ -8,10 +8,10 @@ self-matches. The reference executes this as a sequential per-row loop
 of Chroma ANN queries — O(n) network round-trips; here it is ONE
 distributed job:
 
-    embeddings --simhash bands (pandas UDF)--> explode
-      --> self equi-join on (scope, band)        [shuffle hash join]
-      --> distinct candidate pairs (a < b)       [dedup across bands]
-      --> exact cosine verify (column expr)      [codegen, no Python]
+    embeddings --bands (stored, or a simhash/MinHash pandas UDF)--> explode
+      --> self equi-join on xxhash64(scope, band)  [one band shuffle]
+      --> distinct candidate pairs (a < b)         [dedup across bands]
+      --> exact cosine verify (column expr)        [codegen, no Python]
       --> threshold filter
       --> mirror to directed edges
       --> Window top-k per src
@@ -21,13 +21,11 @@ Scale design:
 - the band table is (doc_id, scope, band:long) — narrow; vectors are
   NOT carried through the explode/join (joined back only for surviving
   candidate pairs), so shuffle volume is O(n·bands·~24B), not O(n·dim);
-- hot buckets (hot repos × common sign patterns) are the skew risk:
-  buckets larger than ``max_bucket`` are split with an explicit salt —
-  members are assigned ``ceil(size/max_bucket)`` salt groups and pairs
-  are generated within (salt_a, salt_b) sub-blocks, preserving the
-  exact pair set while bounding any single join partition (north_rule:
-  "explicit salting of hot repos"); AQE skew-join splitting backs this
-  up at runtime;
+- hot buckets (hot repos × common band values) are the skew risk: a
+  bucket of s members is one join key yielding s(s-1)/2 pairs, and
+  AQE's skew-join split divides that key's partition across tasks
+  (the equi-join-on-set-key design of HERO, SIGMOD 2024, and of the
+  string-similarity join over compressed indexes, ICDE 2022);
 - distinct-pairs dedup happens BEFORE the vector join and cosine, so
   each candidate pair is scored exactly once;
 - top-k per src is a single Window (shuffle on src), ties broken by
@@ -58,13 +56,43 @@ def _similarity(cos: Column, convention: str) -> Column:
     raise ValueError(convention)
 
 
+def band_pairs(bt: DataFrame) -> DataFrame:
+    """The candidate generator: (doc_id, _scope, band) band rows ->
+    distinct (src, dst) pairs with src < dst that share a band within
+    a scope.
+
+    One equi-join of the band rows with themselves on the fused key
+    ``xxhash64(_scope, band)``, the same join shape ``add_batch``
+    probes the store with (operators/incremental_edges.py). Fusing the
+    two columns into one long halves the shuffled key bytes; a
+    cross-scope key collision (~#buckets²/2⁶⁴) can only ADD a
+    candidate, which the verify join's exact scope screen removes.
+    When the join is shuffled, both sides reuse one exchange of the
+    band rows. A hot bucket of s members yields its s(s-1)/2 pairs in
+    one join key; AQE's skew-join split spreads that key's partition
+    over several tasks."""
+    keyed = bt.select(F.xxhash64("_scope", "band").alias("_bkey"), "doc_id")
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a._bkey") == F.col("b._bkey"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
+        # deduped inside a partitioning by src, which the verify join's
+        # src side then reuses: one exchange fewer than a plain distinct
+        .repartition("src")
+        .distinct()
+    )
+
+
 def candidate_pairs_lsh(
     emb: DataFrame,
     scope_col: str | None,
     bands: int,
     rows: int,
     seed: int,
-    max_bucket: int,
 ) -> DataFrame:
     """Hyperplane-LSH band candidates over embedding vectors
     -> distinct (src, dst) with src<dst.
@@ -78,7 +106,7 @@ def candidate_pairs_lsh(
         scope.alias("_scope"),
         F.explode(simhash(F.col("vector"))).alias("band"),
     )
-    return _pairs_from_band_table(bt, max_bucket)
+    return band_pairs(bt)
 
 
 def candidate_pairs_minhash(
@@ -88,16 +116,14 @@ def candidate_pairs_minhash(
     rows: int,
     shingle_k: int,
     seed: int,
-    max_bucket: int,
 ) -> DataFrame:
     """MinHash band candidates over token shingles of ``doc_text``
     -> distinct (src, dst) with src<dst.
 
-    This is the north-star candidate generator ("MinHash + bucketed
-    band signatures"): near-duplicate text collides on whole signature
-    segments, while documents that merely share a few phrases almost
-    never do — far sharper than hyperplane bands when the corpus has a
-    heavy shared-vocabulary background (see tools/tune_lsh.py).
+    Near-duplicate text collides on whole signature segments, while
+    documents that merely share a few phrases almost never do — far
+    sharper than hyperplane bands when the corpus has a heavy
+    shared-vocabulary background (see tools/tune_lsh.py).
     ``text_df`` must have columns (doc_id, doc_text[, scope_col]).
     """
     mh = make_minhash_bands_udf(
@@ -109,128 +135,30 @@ def candidate_pairs_minhash(
         scope.alias("_scope"),
         F.explode(mh(F.col("doc_text"))).alias("band"),
     )
-    return _pairs_from_band_table(bt, max_bucket)
-
-
-def _pairs_from_band_table(
-    bt: DataFrame, max_bucket: int, checkpoint_bt: bool = True
-) -> DataFrame:
-    """Shared band machinery: (doc_id, _scope, band) -> distinct
-    candidate pairs, in ONE shuffle of the band table.
-
-    Each bucket is aggregated into a sorted member array; pairs are then
-    generated bucket-locally with posexplode + slice — pure whole-stage
-    codegen, no self-join, no second scan. (The previous design joined
-    the full band table against a bucket-size table — a sort-merge join
-    that sorted all n·bands rows twice and did not scale; measured
-    22.6s -> ~6s on the 1M-row corpus at local[32].)
-
-    Skew ("explicit salting of hot repos", north_rule): a bucket of
-    size s expands to s(s-1)/2 pairs inside ONE task under the array
-    layout, so oversized buckets (s > max_bucket — degenerate content,
-    hot-repo common patterns; ~0.01% of band rows on the synthetic
-    corpus) are re-exploded to rows and routed through a salted
-    self-join that spreads their quadratic pair generation across
-    ceil(s/max_bucket)^2 tasks. Both paths emit each unordered pair
-    exactly once; the union dedupes across bands.
-    """
-    # when the band table embeds a signature UDF it would otherwise run
-    # the Arrow UDF once per consumer — checkpoint so it runs once.
-    # When bands are STORED (parquet explode, no Python), recompute is
-    # cheaper than materializing 16 bands/doc — callers pass False.
-    if checkpoint_bt:
-        bt = bt.localCheckpoint(eager=True)
-    # fuse (scope, band) into one long key: halves shuffle bytes and
-    # replaces two-column sort comparisons with a single long compare
-    # (measured 27s -> 13s on the 16M-row band shuffle at local[32]).
-    # A cross-scope key collision (~#buckets^2 / 2^64) can only ADD a
-    # candidate pair; the verify join screens scope equality exactly,
-    # so emitted edges are unaffected.
-    keyed = bt.select(F.xxhash64("_scope", "band").alias("_bkey"), "doc_id")
-    # LAZY checkpoint: the bucket table feeds two consumers
-    # (normal-bucket pair generation and the oversized-bucket salt path
-    # below) — without a checkpoint the dominant n·bands-row shuffle
-    # would execute once per consumer. Lazy instead of eager: the
-    # `salted` eager materialization below is the first job to touch
-    # it, so the band shuffle and the salt-table build fuse into ONE
-    # job instead of two back-to-back barriers.
-    buckets = (
-        keyed.groupBy("_bkey")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
-        .where(F.size("_ids") >= 2)  # singletons (~94%) can't pair
-    ).localCheckpoint(eager=False)
-
-    # normal buckets: pair (ids[i], ids[j]) for i<j; sort_array makes
-    # src < dst structural, so no post-filter and dedup is exact.
-    small = buckets.where(F.size("_ids") <= max_bucket)
-    pairs_small = (
-        small.select(F.posexplode("_ids").alias("_i", "src"), F.col("_ids"))
-        .select(
-            "src",
-            F.explode(
-                F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
-            ).alias("dst"),
-        )
-    )
-
-    # oversized buckets: back to rows + salted self-join (bounded tasks)
-    big = buckets.where(F.size("_ids") > max_bucket).select(
-        "_bkey",
-        F.size("_ids").alias("_sz"),
-        F.explode("_ids").alias("doc_id"),
-    )
-    n_salt = F.ceil(F.col("_sz") / max_bucket).cast("int")
-    salted = big.select(
-        "doc_id",
-        "_bkey",
-        n_salt.alias("_nsalt"),
-        F.pmod(F.xxhash64("doc_id"), n_salt).cast("int").alias("_salt"),
-    ).localCheckpoint(eager=True)  # tiny; feeds a-side, b-side, split-right
-
-    a = salted.alias("a")
-    b = salted.alias("b")
-    same = a.join(
-        b,
-        (F.col("a._bkey") == F.col("b._bkey"))
-        & (F.col("a._salt") == F.col("b._salt"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-
-    # cross-salt-group pairs: replicate each right row to every OTHER
-    # salt group, pair against left rows of that group.
-    split_right = (
-        salted.withColumn(
-            "_tgt",
-            F.explode(F.sequence(F.lit(0), F.col("_nsalt") - 1)),
-        )
-        .where(F.col("_tgt") != F.col("_salt"))
-    )
-    cross = a.join(
-        split_right.alias("b"),
-        (F.col("a._bkey") == F.col("b._bkey"))
-        & (F.col("a._salt") == F.col("b._tgt"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-
-    return pairs_small.unionByName(same).unionByName(cross).distinct()
+    return band_pairs(bt)
 
 
 def candidate_pairs_stored(
-    emb: DataFrame, scope_col: str | None, max_bucket: int,
+    emb: DataFrame,
+    scope_col: str | None,
+    max_bucket: int | None = None,
     hash_ids: bool = False,
 ) -> DataFrame:
     """Band candidates from a PRE-COMPUTED ``bands`` column (written by
-    the single-pass featurizer, functions/features.py) — the scale
-    path: no second pass over raw text, no Python in this stage at all.
+    the single-pass featurizer in plans/pipeline.py) — the build path:
+    no second pass over raw text, no Python in this stage at all.
     ``emb`` must have columns (doc_id, bands[, scope_col]).
 
-    ``hash_ids``: run the whole pair machinery on xxhash64(doc_id)
-    surrogates — every shuffle row becomes fixed-width 16B instead of
-    carrying doc_id strings, and bucket-array sorts compare longs. The
-    caller resolves surrogates back to real ids in its verify join. A
-    surrogate collision (~n^2/2^64) only perturbs the CANDIDATE set
-    (a lost or extra pair), which the exact cosine verify screens —
-    emitted edges stay exact.
+    ``max_bucket`` is accepted and unused: hot buckets need no cap
+    since the band join leaves their skew to AQE. It stays a positional
+    parameter only because perfbench's layer sweep passes it.
+
+    ``hash_ids``: run the band join on xxhash64(doc_id) surrogates —
+    every shuffled row becomes fixed-width 16B instead of carrying
+    doc_id strings. The caller resolves surrogates back to real ids in
+    its verify join. A surrogate collision (~n²/2⁶⁴) only perturbs the
+    CANDIDATE set (a lost or extra pair), which the exact cosine verify
+    screens — emitted edges stay exact.
     """
     scope = F.col(scope_col) if scope_col else F.lit("")
     doc = F.xxhash64("doc_id") if hash_ids else F.col("doc_id")
@@ -239,7 +167,7 @@ def candidate_pairs_stored(
         scope.alias("_scope"),
         F.explode(F.col("bands")).alias("band"),
     )
-    return _pairs_from_band_table(bt, max_bucket, checkpoint_bt=False)
+    return band_pairs(bt)
 
 
 def candidate_pairs_exact(emb: DataFrame, scope_col: str | None) -> DataFrame:
@@ -265,7 +193,6 @@ def duplicate_edges(
     bands: int = 24,
     rows: int = 8,
     seed: int = 1337,
-    max_bucket: int = 200,
     assume_normalized: bool = True,
     text: DataFrame | None = None,
     shingle_k: int = 3,
@@ -284,30 +211,30 @@ def duplicate_edges(
     """
     hashed = method == "stored"
     if method == "lsh":
-        pairs = candidate_pairs_lsh(emb, scope_col, bands, rows, seed, max_bucket)
+        pairs = candidate_pairs_lsh(emb, scope_col, bands, rows, seed)
     elif method == "stored":
-        # surrogate-id mode: the band machinery shuffles 16B rows of
+        # surrogate-id mode: the band join shuffles 16B rows of
         # (bucket, xxhash64(doc_id)) instead of doc_id strings; the
         # verify joins below key on the same surrogate and resolve the
         # real ids from the vector side for free.
-        pairs = candidate_pairs_stored(emb, scope_col, max_bucket, hash_ids=True)
+        pairs = candidate_pairs_stored(emb, scope_col, hash_ids=True)
     elif method == "minhash":
         if text is None:
             raise ValueError("method='minhash' requires text=(doc_id, doc_text)")
         pairs = candidate_pairs_minhash(
-            text, scope_col, bands, rows, shingle_k, seed, max_bucket
+            text, scope_col, bands, rows, shingle_k, seed
         )
     elif method == "exact":
         pairs = candidate_pairs_exact(emb, scope_col)
     else:
         raise ValueError(method)
 
-    # no materialization barrier here: the candidate machinery is
+    # no materialization barrier here: the band join is
     # consumed exactly once by the verify join chain below (the join
     # strategy is pinned by shuffle_hash hints, not AQE size stats), so
     # candidates + verify fuse into one job — one fewer full pass.
     # scope columns ride along so the verify join can screen scope
-    # equality exactly (the band machinery keys on a fused hash of
+    # equality exactly (the band join keys on a fused hash of
     # (scope, band) — a cross-scope hash collision may ADD a candidate;
     # this filter removes it).
     vcols = ["doc_id", "vector"] + ([scope_col] if scope_col else [])
@@ -341,7 +268,7 @@ def duplicate_edges(
         scored = scored.where(F.col("_sa") == F.col("_sb"))
     if hashed:
         # surrogate-collision guard: two docs sharing xxhash64(doc_id)
-        # would make the bucket path emit an (x,x) surrogate pair that
+        # would make the band join emit an (x,x) surrogate pair that
         # fans out here to (A,A)/(B,B) self-pairs at similarity 1.0 —
         # screen on the REAL ids so self-exclusion (J4) stays exact
         # even under a collision (~n²/2⁶⁴, but free to close).

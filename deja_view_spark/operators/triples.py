@@ -30,15 +30,14 @@ def doc_key(df: DataFrame) -> DataFrame:
 
 
 def contains_triples(src: DataFrame) -> DataFrame:
-    """(repo, contains, path) — one per source row, deduped."""
-    return (
-        src.select(
-            F.col("repo").alias("subj"),
-            F.lit("contains").alias("pred"),
-            F.col("path").alias("obj"),
-            F.lit(1.0).alias("weight"),
-        )
-        .distinct()
+    """(repo, contains, path) — one per source row; a build's doc_ids
+    are unique (plans/pipeline.py rejects a repeated one), so no
+    dedup shuffle."""
+    return src.select(
+        F.col("repo").alias("subj"),
+        F.lit("contains").alias("pred"),
+        F.col("path").alias("obj"),
+        F.lit(1.0).alias("weight"),
     )
 
 
@@ -72,21 +71,15 @@ def mention_triples(src: DataFrame) -> DataFrame:
 def mention_triples_from_emb(emb: DataFrame) -> DataFrame:
     """(doc, mentions, file) from a featurized table carrying a
     pre-extracted ``mentions`` array (self-references already dropped,
-    per-doc deduped at extraction) — the scale path: the triples stage
-    re-reads no source text (plans/pipeline.py stores mentions in the
-    same single content pass as vectors and bands)."""
-    return (
-        emb.select(
-            F.col("doc_id").alias("subj"),
-            F.explode(F.col("mentions")).alias("obj"),
-        )
-        .select(
-            "subj",
-            F.lit("mentions").alias("pred"),
-            "obj",
-            F.lit(1.0).alias("weight"),
-        )
-        .distinct()
+    per-doc deduped at extraction, doc_ids unique) — the scale path:
+    the triples stage re-reads no source text and shuffles nothing
+    (plans/pipeline.py stores mentions in the same single content pass
+    as vectors and bands)."""
+    return emb.select(
+        F.col("doc_id").alias("subj"),
+        F.lit("mentions").alias("pred"),
+        F.explode(F.col("mentions")).alias("obj"),
+        F.lit(1.0).alias("weight"),
     )
 
 

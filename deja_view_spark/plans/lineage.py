@@ -1,8 +1,11 @@
 """Per-partition lineage + idempotent resume (north_rule requirement).
 
-Every stage writes, alongside its output, lineage rows:
+Every stage records, per part of its input, one lineage row:
 
     (run_id, stage, part_key, input_rows, input_sha_agg, output_rows)
+
+A build appends the rows of all its stages in one driver-side parquet
+write once its outputs are written (``append_lineage``).
 
 - ``part_key`` is the pipeline's unit of resume (the repo — the same
   key the output tables are partitioned by);
@@ -21,13 +24,26 @@ Every stage writes, alongside its output, lineage rows:
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, part_key string, input_rows long, "
     "input_sha_agg decimal(38,0), output_rows long"
+)
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("part_key", pa.string()),
+        ("input_rows", pa.int64()),
+        ("input_sha_agg", pa.decimal128(38, 0)),
+        ("output_rows", pa.int64()),
+    ]
 )
 
 
@@ -59,36 +75,22 @@ def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     )
 
 
-def record_lineage(
-    inputs: DataFrame,
-    outputs_count_by_part: DataFrame,
-    out_dir: str,
-    stage: str,
-    run_id: str,
-    part_col: str = "repo",
-) -> None:
-    """Aggregate lineage for this stage run and append it.
-
-    ``inputs`` must carry (part_col, sha256); ``outputs_count_by_part``
-    is (part_key, output_rows).
-    """
-    lin = (
-        inputs.groupBy(F.col(part_col).alias("part_key"))
-        .agg(
-            F.count("*").alias("input_rows"),
-            sha_agg_col().alias("input_sha_agg"),
-        )
-        .join(outputs_count_by_part, "part_key", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "part_key",
-            "input_rows",
-            "input_sha_agg",
-            F.coalesce(F.col("output_rows"), F.lit(0)).alias("output_rows"),
-        )
+def append_lineage(out_dir: str, rows: list[tuple]) -> None:
+    """Append lineage rows (in ``LINEAGE_SCHEMA`` order) as ONE parquet
+    file written on the driver: no Spark job. The file is written under
+    a hidden name (Spark's reader skips names starting with ``.``) and
+    renamed into ``kg_lineage/``, so a reader sees all of the rows or
+    none of them."""
+    if not rows:
+        return
+    path = lineage_path(out_dir)
+    os.makedirs(path, exist_ok=True)
+    table = pa.Table.from_pylist(
+        [dict(zip(_ARROW_SCHEMA.names, r)) for r in rows], _ARROW_SCHEMA
     )
-    lin.write.mode("append").parquet(lineage_path(out_dir))
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, os.path.join(path, "." + name))
+    os.replace(os.path.join(path, "." + name), os.path.join(path, name))
 
 
 def record_lineage_from_table(
@@ -98,19 +100,15 @@ def record_lineage_from_table(
     run_id: str,
     part_col: str = "repo",
 ) -> None:
-    """Fast path for stages whose output is 1:1 with its input and
+    """Lineage for a stage whose output is 1:1 with its input and
     carries the sha256 column (embeddings): ONE aggregation over the
-    written table yields input_rows == output_rows and the sha digest —
-    no source re-scan, no join."""
-    lin = table.groupBy(F.col(part_col).alias("part_key")).agg(
-        F.count("*").alias("input_rows"),
-        sha_agg_col().alias("input_sha_agg"),
+    table yields input_rows == output_rows and the sha digest per part,
+    collected and appended by ``append_lineage``."""
+    parts = (
+        table.groupBy(F.col(part_col).alias("part_key"))
+        .agg(F.count("*").alias("n"), sha_agg_col().alias("sha"))
+        .collect()
     )
-    lin.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        "part_key",
-        "input_rows",
-        "input_sha_agg",
-        F.col("input_rows").alias("output_rows"),
-    ).write.mode("append").parquet(lineage_path(out_dir))
+    append_lineage(
+        out_dir, [(run_id, stage, r.part_key, r.n, r.sha, r.n) for r in parts]
+    )

@@ -223,8 +223,7 @@ def q_docs_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     8B shuffle keys, never shingle strings); ONE shuffle groups the
     inverted index into per-shingle posting arrays; the df cutoff drops
     oversized postings; pairs are generated bucket-locally with
-    posexplode+slice (whole-stage codegen, no self-join — same
-    machinery as operators/selfjoin._pairs_from_band_table). A hash
+    posexplode+slice (whole-stage codegen, no self-join). A hash
     collision (~#shingles²/2⁶⁴) could merge two shingles; at oracle
     scale this is unobservable."""
     docs = load_table(spark, sf_dir, "documents")

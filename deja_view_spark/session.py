@@ -10,7 +10,9 @@ all run the same configuration. Defaults target the sandbox
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from a high initial value;
 - broadcast threshold left at default (10MB) — small dims (probe rows,
-  band tables of new docs) broadcast automatically.
+  band tables of new docs) broadcast automatically;
+- a generated-code cache that holds a whole KG build (see
+  ``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -18,6 +20,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries (Spark's default 100, LRU). One
+# KGPipeline.run compiles 141-146 distinct classes (CodegenMetrics'
+# compilation count, 2000-row table at local[4]), so under the default
+# every warm build cycles through the cache and misses each entry:
+# ~141 Janino compiles (1.0-1.4 s) plus C1/C2 re-JIT of the new classes
+# per build. With 1000 (or 2000) entries, builds 2+ compiled 0 classes.
+# A static conf: set when the session starts, so it reaches the tests'
+# session and spark-submit runs alike.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -72,6 +84,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -39,9 +39,8 @@ def _featurized(spark, n_rows=240):
 
 def _expected(full):
     edges = duplicate_edges(full, method="stored", scope_col=None, **KNOBS)
-    comp = connected_components(
-        edges.where(F.col("src") < F.col("dst")), None, "src", "dst"
-    )
+    # all directed top-k edges, as the build feeds them
+    comp = connected_components(edges, None, "src", "dst")
     return (
         {(r.src, r.dst, r.similarity, r.rank) for r in edges.collect()},
         {(r.id, r.component) for r in comp.collect()},
@@ -219,3 +218,31 @@ def test_warm_add_batch_runs_at_most_seven_jobs(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert 1 <= len(jobs) <= 7
+
+
+def _one_way_vectors():
+    """x1, x2, x3 in one plane: cos(x1,x2)=0.9, cos(x2,x3)=0.8,
+    cos(x1,x3)~0.46. At top_k=1 the edges are x1->x2, x2->x1 and
+    x3->x2: the pair (x2, x3) survives only as x3 -> x2."""
+    ang = {"x1": 0.0, "x2": np.arccos(0.9)}
+    ang["x3"] = ang["x2"] + np.arccos(0.8)
+    return {k: [float(np.cos(a)), float(np.sin(a)), 0.0] for k, a in ang.items()}
+
+
+def test_components_keep_one_way_topk_edge(spark, tmp_path):
+    """A vertex whose only edge top-k kept in its own direction, toward
+    a smaller id, must still get a component label."""
+    rows = [(f"r/a/{k}", v, [1, 2]) for k, v in _one_way_vectors().items()]
+    emb = spark.createDataFrame(
+        rows, "doc_id string, vector array<float>, bands array<bigint>"
+    )
+    inc = IncrementalDuplicates(
+        spark, str(tmp_path / "st"), threshold=0.75, top_k=1,
+        convention="service",
+    )
+    inc.add_batch(emb, 0)
+    assert {(r.src, r.dst) for r in inc.edges().collect()} == {
+        ("r/a/x1", "r/a/x2"), ("r/a/x2", "r/a/x1"), ("r/a/x3", "r/a/x2"),
+    }
+    labels = {r.id: r.component for r in inc.components().collect()}
+    assert labels == {f"r/a/x{i}": "r/a/x1" for i in (1, 2, 3)}

@@ -2,6 +2,7 @@
 exist per predicate, per-row sha256 lineage holds, re-run is
 idempotent, resume skips completed partitions."""
 
+import os
 import shutil
 
 import pytest
@@ -105,3 +106,89 @@ def test_lineage_rows_recorded(spark, built, out_dir):
     first_run = emb_lin.groupBy("run_id").agg(
         F.sum("input_rows").alias("n")).orderBy(F.desc("n")).head()
     assert first_run.n == N_ROWS
+
+
+def test_build_components_keep_one_way_topk_edge(spark, tmp_path):
+    """x3's only top-k edge is x3 -> x2 (x2 keeps x1 at top_k=1): the
+    build must still write x3's same_as triple."""
+    import numpy as np
+
+    ang = {"x1": 0.0, "x2": np.arccos(0.9)}
+    ang["x3"] = ang["x2"] + np.arccos(0.8)
+    rows = [
+        ("r/a", k, f"r/a/{k}", [float(np.cos(a)), float(np.sin(a)), 0.0], [1, 2])
+        for k, a in ang.items()
+    ]
+    emb = spark.createDataFrame(
+        rows,
+        "repo string, path string, doc_id string, vector array<float>, "
+        "bands array<bigint>",
+    ).select(
+        "*",
+        F.sha2("doc_id", 256).alias("sha256"),
+        F.array().cast("array<string>").alias("mentions"),
+    )
+    pipe = KGPipeline(
+        spark, emb, str(tmp_path), threshold=0.75, top_k=1,
+        convention="service",
+    )
+    tri = pipe.build_triples(emb)
+    pipe._join_bg()
+    got = {
+        (r.pred, r.subj, r.obj)
+        for r in tri.where(F.col("pred").isin("duplicates", "same_as")).collect()
+    }
+    assert got == {
+        ("duplicates", "r/a/x1", "r/a/x2"),
+        ("duplicates", "r/a/x2", "r/a/x1"),
+        ("duplicates", "r/a/x3", "r/a/x2"),
+    } | {("same_as", f"r/a/x{i}", "r/a/x1") for i in (1, 2, 3)}
+    assert pipe.metrics["triples"]["n_triples"] == tri.count()
+
+
+def test_repeated_doc_id_is_rejected_before_any_write(spark, tmp_path):
+    """A source row repeated would write its duplicates edges twice; the
+    build raises naming the doc_id, and writes no triples or lineage."""
+    src = generate_repos(spark, 60)
+    first = src.orderBy("repo", "path").limit(1)
+    doc = "/".join(first.select("repo", "path").head())
+    out = str(tmp_path / "kg")
+    with pytest.raises(ValueError, match=doc):
+        KGPipeline(spark, src.unionByName(first), out).run()
+    assert not os.path.exists(os.path.join(out, "kg_triples"))
+    assert not os.path.exists(os.path.join(out, "kg_lineage"))
+
+
+@pytest.fixture(scope="module")
+def warm_build(spark, tmp_path_factory):
+    """A second build of the default pipeline in one session: its Spark
+    jobs (pool threads included, by job group) and its Janino compiles."""
+    src = generate_repos(spark, N_ROWS).localCheckpoint(eager=True)
+    d = tmp_path_factory.mktemp("kg_warm")
+    KGPipeline(spark, src, str(d / "a")).run()
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    try:
+        sc.setJobGroup("kg-warm-build", "kg-warm-build")
+        KGPipeline(spark, src, str(d / "b")).run()
+        jobs = sc.statusTracker().getJobIdsForGroup("kg-warm-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    yield len(jobs), compiles.METRIC_COMPILATION_TIME().getCount() - before
+    shutil.rmtree(str(d), ignore_errors=True)
+
+
+def test_warm_build_runs_at_most_21_jobs_in_its_group(warm_build):
+    """Featurize, per-repo aggregate, embeddings write, band join +
+    verify, components, two triple writes; background-thread jobs run
+    in the caller's job group, and lineage is one driver-side append."""
+    jobs, _ = warm_build
+    assert 1 <= jobs <= 21
+
+
+def test_warm_build_compiles_no_code(warm_build):
+    """The session's generated-code cache holds every class one build
+    compiles, so a repeat build compiles none."""
+    _, compiles = warm_build
+    assert compiles == 0

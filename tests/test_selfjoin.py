@@ -108,41 +108,32 @@ def test_lsh_recall_on_random_corpus(spark):
     assert precision >= 0.95, f"precision {precision:.3f}"
 
 
-def test_salt_path_preserves_exact_pair_set(spark):
-    """North-rule 'explicit salting of hot repos': forcing EVERY bucket
-    through the oversized-bucket salted self-join (max_bucket=2) must
-    emit exactly the pair set of the bucket-array fast path
-    (max_bucket=10^9) — the salt decomposition is pair-set-preserving,
-    not approximate."""
-    from deja_view_spark.operators.selfjoin import _pairs_from_band_table
-
-    # 3 buckets: sizes 7 (hot), 3, 1 — plus a doc in two buckets
-    rows = []
-    for i in range(7):
-        rows.append((f"d{i:02d}", "", 100))
-    for i in range(7, 10):
-        rows.append((f"d{i:02d}", "", 200))
-    rows.append(("d00", "", 200))  # cross-bucket membership
-    rows.append(("d99", "", 300))  # singleton
-    bt = spark.createDataFrame(rows, "doc_id string, _scope string, band long")
-
-    fast = {
-        (r["src"], r["dst"])
-        for r in _pairs_from_band_table(bt, max_bucket=10**9).collect()
-    }
-    salted = {
-        (r["src"], r["dst"])
-        for r in _pairs_from_band_table(bt, max_bucket=2).collect()
-    }
-    # expected: all pairs within each bucket, deduped, src < dst
+def test_band_join_matches_brute_force(spark):
+    """The band join emits exactly the pairs that share a band within a
+    scope (or anywhere, unscoped), each once as (src < dst) — including
+    a 260-member hot bucket, which AQE may split but never drops."""
     import itertools
 
-    expect = set()
-    members = {100: [f"d{i:02d}" for i in range(7)],
-               200: [f"d{i:02d}" for i in range(7, 10)] + ["d00"],
-               300: ["d99"]}
-    for ids in members.values():
-        for a, b in itertools.combinations(sorted(ids), 2):
-            expect.add((a, b))
-    assert fast == expect
-    assert salted == expect
+    from deja_view_spark.operators.selfjoin import candidate_pairs_stored
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for i in range(300):
+        repo = "r1" if i < 270 else "r2"
+        bands = [int(b) for b in rng.integers(100, 140, size=3)]
+        if i < 260 or i >= 290:  # hot bucket: 260 in r1, 10 in r2
+            bands.append(7)
+        rows.append((f"d{i:03d}", repo, bands))
+    emb = spark.createDataFrame(
+        rows, "doc_id string, repo string, bands array<bigint>"
+    )
+    for scope in (None, "repo"):
+        expect = {
+            (a[0], b[0])
+            for a, b in itertools.combinations(rows, 2)
+            if set(a[2]) & set(b[2]) and (scope is None or a[1] == b[1])
+        }
+        got = [tuple(r) for r in candidate_pairs_stored(emb, scope).collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == expect
+    assert ("d000", "d259") in expect and ("d000", "d290") not in expect

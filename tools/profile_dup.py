@@ -22,7 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from deja_view_spark.datagen import generate_repos
-from deja_view_spark.operators.selfjoin import _pairs_from_band_table, _similarity
+from deja_view_spark.operators.selfjoin import _similarity, candidate_pairs_stored
 from deja_view_spark.functions.similarity import cosine_sim
 from deja_view_spark.plans.pipeline import KGPipeline
 from deja_view_spark.session import get_spark
@@ -58,16 +58,10 @@ def main() -> None:
     ensure_py_files(spark)
     emb = spark.read.parquet(f"{BASE}/kg/kg_embeddings")
 
-    # phase 1: band table -> distinct candidate pairs (one shuffle +
-    # bucket-local pair generation; oversized buckets salted)
+    # phase 1: band rows -> distinct candidate pairs (the band
+    # equi-join of the build path)
     t0 = time.time()
-    bt = emb.select(
-        F.col("doc_id"), F.col("repo").alias("_scope"),
-        F.explode(F.col("bands")).alias("band"),
-    )
-    pairs = _pairs_from_band_table(bt, 200, checkpoint_bt=False).localCheckpoint(
-        eager=True
-    )
+    pairs = candidate_pairs_stored(emb, "repo").localCheckpoint(eager=True)
     t["pairs_ckpt"] = time.time() - t0
     n_band_rows = -1
     n_pairs = pairs.count()
